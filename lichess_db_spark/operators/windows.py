@@ -7,10 +7,10 @@ them: ``rowsBetween(unboundedPreceding, currentRow)`` running frames,
 ordered by the reference's (DateTime, ID) sort key (ingester.py:404)
 plus explicit tiebreakers for cross-engine determinism.
 
-Scale note: a window over (Player) shuffles once on the partition
-key; all four running features share one window spec, so Catalyst
-computes them in a single Window physical node — one shuffle + one
-sort for the whole feature set.
+Scale note: features over one window spec share a single Window
+physical node (one sort). A (Player) hash partitioning also satisfies
+the (Event, Player) clustering, so ``add_running_features`` sorts
+twice on one Player shuffle.
 """
 
 from __future__ import annotations
@@ -51,7 +51,8 @@ def add_running_features(
     opp_elo_col: str = "OpponentElo",
     order: Sequence[str] = ("DateTime", "ID"),
 ) -> DataFrame:
-    """W1-W4 in two window specs (one shuffle per partitioning).
+    """W1-W4 in two window specs over one Player shuffle. One
+    ``withColumns`` call, so the input plan is analysed once.
 
     W4 note: the reference's ``Elo_max_faced`` is buggy — it compares
     the player's *own* Elo (ingester.py:210-218), making it identical
@@ -61,9 +62,11 @@ def add_running_features(
     """
     w_type = running_frame([type_col, player_col], order)
     w_all = running_frame([player_col], order)
-    return (
-        df.withColumn("Player_cum_games_type", running_count(w_type).cast("int"))
-        .withColumn("Player_cum_games_total", running_count(w_all).cast("int"))
-        .withColumn("PlayerElo_max", running_max(elo_col, w_type).cast("int"))
-        .withColumn("PlayerElo_max_faced", running_max(opp_elo_col, w_type).cast("int"))
+    return df.withColumns(
+        {
+            "Player_cum_games_type": running_count(w_type).cast("int"),
+            "Player_cum_games_total": running_count(w_all).cast("int"),
+            "PlayerElo_max": running_max(elo_col, w_type).cast("int"),
+            "PlayerElo_max_faced": running_max(opp_elo_col, w_type).cast("int"),
+        }
     )

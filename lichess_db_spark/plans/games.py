@@ -5,19 +5,22 @@ raw parsed games (White/Black wide, all strings)
   -> unpivot    (P2+P3+U1 as a single-scan explode of two role structs —
                  the reference scans its NDJSON twice and merge-sorts,
                  ingester.py:345-404; explode halves the IO)
-  -> features   (W1-W6 running windows over (Event/Player, DateTime, ID))
+  -> features   (W1-W6 running windows over (Event/Player, DateTime, ID),
+                 then Opponent_* from one window over ID)
   -> bin        (F11 PlayerElo_bin)
 
 Output is the canonical player-game-role table (SURVEY.md §1.3,
-reference ingester.py:284,345-369). Scale: the only shuffles are the
-two window partitionings (Event,Player) and (Player); everything else
-is narrow. At 100 TB, write bucketed by Player so downstream
-per-player analytics (cell-8 self-join shape) co-locate for free.
+reference ingester.py:284,345-369). Scale: each staged byte is parsed
+once, and the only shuffles are two hash partitionings, `Player` (the
+running windows; the (Event, Player) window reuses it) then `ID` (the
+opponent features); everything else is narrow. At 100 TB, write
+bucketed by Player so downstream per-player analytics (cell-8
+self-join shape) co-locate for free.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import (
@@ -50,37 +53,37 @@ _Q_NULL_COLS = (
 
 
 def clean_games(raw: DataFrame, include_moves: bool = False) -> DataFrame:
-    """Header strings -> typed game-level columns (one row per game)."""
-    df = raw
-    for c in _Q_NULL_COLS:
-        if c in df.columns:
-            df = df.withColumn(c, question_to_null(c))
-    df = (
-        df.withColumn("Tournament", F.coalesce(F.col("Event").contains("tournament"), F.lit(False)))
-        .withColumn("Event", strip_tournament_suffix("Event"))
-        .withColumn("ID", site_to_id("Site"))
-        .withColumn("DateTime", concat_datetime("UTCDate", "UTCTime"))
-        .withColumn("WhiteElo", elo_smallint("WhiteElo"))
-        .withColumn("BlackElo", elo_smallint("BlackElo"))
-        .withColumn("WhiteRatingDiff", elo_smallint("WhiteRatingDiff"))
-        .withColumn("BlackRatingDiff", elo_smallint("BlackRatingDiff"))
-        .withColumn("WhiteTitle_flag", F.col("WhiteTitle").isNotNull())
-        .withColumn("BlackTitle_flag", F.col("BlackTitle").isNotNull())
+    """Header strings -> typed game-level columns (one row per game).
+
+    Two ``withColumns`` steps, not one ``withColumn`` per column: each
+    call re-analyses the lambda-heavy parse plan beneath it on the
+    driver. The derived columns read the '?'-nulled headers of the
+    first step (``Tournament`` the unstripped Event).
+    """
+    df = raw.withColumns({c: question_to_null(c) for c in _Q_NULL_COLS if c in raw.columns})
+    game_id = site_to_id("Site")
+    derived = {
+        "Tournament": F.coalesce(F.col("Event").contains("tournament"), F.lit(False)),
+        "Event": strip_tournament_suffix("Event"),
+        "ID": game_id,
+        "DateTime": concat_datetime("UTCDate", "UTCTime"),
+        **{c: elo_smallint(c) for c in ("WhiteElo", "BlackElo",
+                                        "WhiteRatingDiff", "BlackRatingDiff")},
+        "WhiteTitle_flag": F.col("WhiteTitle").isNotNull(),
+        "BlackTitle_flag": F.col("BlackTitle").isNotNull(),
         # W6: per-game random — deterministic replacement for the
         # reference's unseeded random() (drawn twice, second wins,
         # ingester.py:195); keyed on the game ID.
-        .withColumn("ID_random", stable_unit_hash_str("ID"))
+        "ID_random": stable_unit_hash_str(game_id),
         # W5: per-player stable tags
-        .withColumn("White_random", stable_unit_hash_str("White"))
-        .withColumn("Black_random", stable_unit_hash_str("Black"))
-    )
+        "White_random": stable_unit_hash_str("White"),
+        "Black_random": stable_unit_hash_str("Black"),
+    }
     if include_moves and "Moves" in df.columns:
-        df = df.withColumn(
-            "Evaluation_flag", F.coalesce(F.col("Moves").contains("eval"), F.lit(False))
-        ).withColumn("Moves", truncate_moves("Moves"))
-    elif "Moves" in df.columns:
-        df = df.drop("Moves")
-    return df
+        derived["Evaluation_flag"] = F.coalesce(F.col("Moves").contains("eval"), F.lit(False))
+        derived["Moves"] = truncate_moves("Moves")
+    df = df.withColumns(derived)
+    return df if include_moves else df.drop("Moves")
 
 
 def _role_struct(role: str, include_moves: bool) -> Column:
@@ -128,26 +131,33 @@ def add_features(unpivoted: DataFrame) -> DataFrame:
 
     Opponent-side features (reference emits both sides per row,
     ingester.py:345-369) are NOT re-windowed: a game's Opponent_* are
-    exactly the mirror row's Player_* (test-pinned invariant), so a
-    self-join on (ID, opposite role) fetches them — one ID shuffle
-    instead of two more window partitionings (4 sort rounds -> 2
-    sorts + 1 hash join).
+    exactly the other role's Player_* (test-pinned invariant), so one
+    unordered window over ID reads them off the game's other row — one
+    ID shuffle instead of two more window partitionings. A self-join
+    would parse the input twice: its branches prune to different
+    columns, so Spark cannot reuse the exchange. Null-ID games are
+    dropped (their rows would all share one window); games that share
+    an ID share one window, so each row sees the max over the copies.
     """
     from ..operators.windows import add_running_features
 
-    df = add_running_features(unpivoted)
-    mirror = df.select(
-        "ID",
-        F.when(F.col("Role_player") == "White", "Black")
-        .otherwise("White")
-        .alias("Role_player"),
-        F.col("Player_cum_games_type").alias("Opponent_cum_games_type"),
-        F.col("Player_cum_games_total").alias("Opponent_cum_games_total"),
-        F.col("PlayerElo_max").alias("OpponentElo_max"),
-        F.col("PlayerElo_max_faced").alias("OpponentElo_max_faced"),
+    game = Window.partitionBy("ID")
+    white = F.col("Role_player") == "White"
+
+    def other_row(c: str) -> Column:
+        on_black, on_white = (F.max(F.when(side, F.col(c))).over(game) for side in (~white, white))
+        return F.when(white, on_black).otherwise(on_white)
+
+    features = ("Player_cum_games_type", "Player_cum_games_total", "PlayerElo_max",
+                "PlayerElo_max_faced")
+    return (
+        add_running_features(unpivoted)
+        .where(F.col("ID").isNotNull())
+        .withColumns(
+            {c.replace("Player", "Opponent"): other_row(c) for c in features}
+            | {"PlayerElo_bin": elo_bin("PlayerElo")}
+        )
     )
-    df = df.join(mirror, ["ID", "Role_player"])
-    return df.withColumn("PlayerElo_bin", elo_bin("PlayerElo"))
 
 
 def games_pipeline(raw: DataFrame, include_moves: bool = False) -> DataFrame:

@@ -4,22 +4,20 @@ The reference parses PGN with a line state machine inside its
 download loop (ingester.py:113-235). Here the same semantics are a
 table-valued transform over distributed text:
 
-- ``read_pgn(spark, path)``: ``spark.read.text`` -> game-boundary
-  grouping -> header parse, all with DataFrame/array expressions
-  (JVM-side). Games are delimited by their *moves* line (a line
-  starting "1." or containing a bare result), which lets grouping be
-  expressed relationally: a running count of moves-lines *before*
-  each line assigns every line a game id.
-- ``parse_pgn_partitions``: the mapPartitions twin for genuinely
-  imperative needs (kept small; used by the streaming ingest where
-  per-batch Python is already in play).
+- ``parse_pgn_text(spark, path)``: the batch path. Each staged chunk
+  is read whole (``binaryFile``) and split into games with array
+  expressions inside the file row (JVM-side, zero shuffles). A game
+  ends at its *moves* line (a non-header, non-blank line); the header
+  lines since the previous moves line belong to it.
+- ``parse_pgn_partitions``: the imperative state-machine twin, used
+  by the ``pgn`` DataSource behind the streaming ingest and as the
+  tests' oracle.
 
 Parallelism at 100 TB: one ``.pgn.zst`` month is a single
 non-splittable stream, so the unit of parallelism is the month file
-(staged to chunked text by sources.staging); after staging, Spark
-splits the text files freely because game grouping only needs
-line order *within* a game, which file-split boundaries preserve
-after the repartition-by-game-id below.
+(staged to chunked text by sources.staging, cut at game boundaries);
+after staging, each chunk file parses in one task, so the unit of
+parallelism is the chunk.
 """
 
 from __future__ import annotations
@@ -27,7 +25,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -59,54 +57,6 @@ RAW_GAME_SCHEMA = StructType(
     [StructField(f, StringType()) for f in HEADER_FIELDS]
     + [StructField("Moves", StringType())]
 )
-
-
-def games_from_lines(lines: DataFrame, text_col: str = "value") -> DataFrame:
-    """Group raw PGN lines into per-game rows, relationally.
-
-    A line starting ``[`` is a header; a non-blank non-header line is
-    the moves line (reference: moves start with "1.", ingester.py:153
-    — but abandoned games can lack the "1." prefix, so any non-header
-    payload line closes the game, matching the blank-line flush at
-    ingester.py:162). game_id = running count of *completed* games
-    before this line.
-
-    Note: this helper assumes a single ordered partition of lines
-    (fine for fixtures/tests). The production path is
-    ``parse_pgn_text`` below, which keys lines by (file, offset) and
-    is safe under splitting.
-    """
-    w = Window.orderBy(F.col("_pos"))
-    lines = lines.withColumn("_pos", F.monotonically_increasing_id())
-    is_moves = (~F.col(text_col).startswith("[")) & (F.trim(F.col(text_col)) != "")
-    with_id = lines.withColumn(
-        "game_id",
-        F.sum(F.when(is_moves, 1).otherwise(0)).over(w) - F.when(is_moves, 1).otherwise(0),
-    )
-    return _assemble_games(with_id, text_col)
-
-
-def _assemble_games(with_id: DataFrame, text_col: str) -> DataFrame:
-    """lines+game_id -> one row per game with header map + moves."""
-    kv = F.regexp_extract_all(F.col(text_col), F.lit(r'\[(\S+)\s"(.*)"\]'), F.lit(0))
-    header_key = F.regexp_extract(F.col(text_col), r'\[(\S+)\s"', 1)
-    header_val = F.regexp_extract(F.col(text_col), r'\[\S+\s"(.*)"\]', 1)
-    is_header = F.col(text_col).startswith("[")
-    is_moves = (~is_header) & (F.trim(F.col(text_col)) != "")
-    parsed = with_id.select(
-        "game_id",
-        F.when(is_header, header_key).alias("k"),
-        F.when(is_header, header_val).alias("v"),
-        F.when(is_moves, F.col(text_col)).alias("moves_line"),
-    )
-    grouped = parsed.groupBy("game_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.when(F.col("k").isNotNull(), F.struct("k", "v")))
-        ).alias("h"),
-        F.first("moves_line", ignorenulls=True).alias("Moves"),
-    )
-    cols = [F.col("h").getItem(f).alias(f) for f in HEADER_FIELDS]
-    return grouped.where(F.col("Moves").isNotNull()).select("game_id", *cols, "Moves")
 
 
 def parse_pgn_text(spark: SparkSession, path: str) -> DataFrame:

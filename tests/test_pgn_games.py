@@ -133,6 +133,62 @@ def test_mirrored_feature_consistency(raw_games):
     assert bad.count() == 0, bad.collect()
 
 
+def _pgn_game(site, white, black, white_elo, black_elo, utc_time):
+    site_line = "" if site is None else f'[Site "{site}"]\n'
+    return (
+        f'[Event "Rated Blitz game"]\n{site_line}'
+        f'[White "{white}"]\n[Black "{black}"]\n[Result "1-0"]\n'
+        f'[UTCDate "2024.01.01"]\n[UTCTime "{utc_time}"]\n'
+        f'[WhiteElo "{white_elo}"]\n[BlackElo "{black_elo}"]\n\n1. e4 e5 1-0\n\n'
+    )
+
+
+def _pipeline_of(spark, tmp_path, games):
+    p = tmp_path / "edge.pgn"
+    p.write_text("".join(games))
+    return games_pipeline(parse_pgn_text(spark, str(p)))
+
+
+def test_null_id_games_are_dropped(spark, tmp_path):
+    """A game whose Site is missing or '?' has a NULL ID and no row in
+    the table; the other games are unaffected."""
+    out = _pipeline_of(spark, tmp_path, [
+        _pgn_game(None, "a", "b", "1500", "1600", "00:00:01"),
+        _pgn_game("?", "c", "d", "1500", "1600", "00:00:02"),
+        _pgn_game("https://lichess.org/kept0001", "e", "f", "1500", "1600", "00:00:03"),
+    ])
+    assert sorted((r.ID, r.Role_player) for r in out.collect()) == [
+        ("kept0001", "Black"), ("kept0001", "White"),
+    ]
+
+
+def test_unknown_elo_side_leaves_opponent_max_null(spark, tmp_path):
+    """A player whose Elo is '?' in every game has no running max, so
+    the other row's OpponentElo_max is NULL, not 0 or a stale value."""
+    out = _pipeline_of(spark, tmp_path, [
+        _pgn_game("https://lichess.org/noelo001", "rated", "anon", "1500", "?", "00:00:01"),
+        _pgn_game("https://lichess.org/noelo002", "anon", "rated", "?", "1510", "00:00:02"),
+    ])
+    rows = {(r.ID, r.Player): r for r in out.collect()}
+    for gid in ("noelo001", "noelo002"):
+        assert rows[(gid, "anon")].PlayerElo_max is None
+        assert rows[(gid, "rated")].OpponentElo_max is None
+    assert rows[("noelo001", "anon")].OpponentElo_max == 1500
+    assert rows[("noelo002", "anon")].OpponentElo_max == 1510
+
+
+def test_shared_id_games_do_not_fan_out(spark, tmp_path):
+    """Two games with the same ID give one row per game and role (4),
+    not the 8 a join on (ID, role) produced by pairing every copy with
+    every other."""
+    out = _pipeline_of(spark, tmp_path, [
+        _pgn_game("https://lichess.org/dup00001", "p1", "p2", "1500", "1600", "00:00:01"),
+        _pgn_game("https://lichess.org/dup00001", "p3", "p4", "1700", "1800", "00:00:02"),
+    ])
+    assert out.count() == 4
+    assert sorted(r.Player for r in out.collect()) == ["p1", "p2", "p3", "p4"]
+
+
 def test_multisplit_chunk_order_contract(spark, tmp_path):
     """Line order must come from file content, not partition ids: a
     chunk many times larger than maxPartitionBytes parses identically

@@ -234,6 +234,25 @@ def test_window_features_share_one_shuffle_per_partitioning(spark):
     assert plan.count("Window") == 2, plan
 
 
+def test_games_table_parses_once_without_join(spark):
+    """The batch ingest reads each staged byte once: Opponent_* come
+    from one window over ID, not a self-join whose second branch
+    re-scans and re-parses the PGN (its pruned columns differ, so
+    Spark cannot reuse the exchange). The only exchanges are the
+    running windows' Player partitioning and the opponent window's ID."""
+    import os
+    import re
+
+    from lichess_db_spark.plans.ingest import build_games_table
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "games.pgn")
+    plan = _plan(build_games_table(spark, fixture), "simple")
+    assert plan.count("FileScan binaryFile") == 1, plan
+    assert "Join" not in plan, plan
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*), \d+\)", plan)
+    assert sorted(re.sub(r"#\d+", "", k) for k in keys) == ["ID", "Player"], plan
+
+
 def test_tfidf_builds_lazily_without_vocab_broadcast(spark):
     """tfidf_top_terms must not run a job at plan-build (corpus count is
     a cross-joined 1-row aggregate, not a driver .count()) and must not

@@ -99,8 +99,9 @@ def test_stream_games_ingest_matches_batch_pipeline(spark, tmp_path):
     stage = tmp_path / "stage"
     stage.mkdir()
     shutil.copy(fixture, stage / "chunk_00000.pgn")
-    # second chunk gets distinct game ids (duplicate IDs would fan out
-    # the opponent mirror-join — in batch mode too)
+    # second chunk gets distinct game ids: games that share an ID share
+    # one opponent window (in batch mode too), so each copy would see
+    # the max of both copies' features
     text = open(fixture, encoding="utf-8").read()
     (stage / "chunk_00001.pgn").write_text(
         text.replace("lichess.org/", "lichess.org/x"), encoding="utf-8"
