@@ -190,9 +190,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from lichess_db_spark.io import write_parquet
-    from lichess_db_spark.plans.games import games_pipeline
+    from lichess_db_spark.plans.ingest import build_games_table
     from lichess_db_spark.session import get_spark
-    from lichess_db_spark.sources.pgn import parse_pgn_text
 
     staging = tempfile.mkdtemp(prefix="pgn_bench_")
     out = tempfile.mkdtemp(prefix="games_bench_")
@@ -204,8 +203,7 @@ def main() -> None:
         spark = get_spark("ingest-bench")
         spark.sparkContext.setLogLevel("ERROR")
         t0 = time.perf_counter()
-        raw = parse_pgn_text(spark, f"{staging}/*.pgn").drop("game_id")
-        df = games_pipeline(raw)
+        df = build_games_table(spark, f"{staging}/*.pgn")
         write_parquet(
             df.withColumn("year", F.year("DateTime")).withColumn("month", F.month("DateTime")),
             out,

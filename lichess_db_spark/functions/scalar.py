@@ -1,9 +1,8 @@
 """Scalar column helpers (SURVEY.md §2.8 F1-F14).
 
-All JVM-side ``pyspark.sql.functions`` compositions — no Python UDFs.
-The reference's lone Python callable (``map_elements(d_rev_result.get)``,
-ingester.py:377) is deliberately re-expressed as a ``when`` chain (F9)
-so the whole plan stays inside whole-stage codegen.
+All JVM-side column expressions — no Python UDFs. The ingest
+pipeline's own derivations (F2-F10) are SQL text in ``plans.games``;
+what stays here is shared with the catalog and ``plans.eda``.
 """
 
 from __future__ import annotations
@@ -13,9 +12,6 @@ from pyspark.sql import functions as F
 
 # F8: result -> winner recode (eda.ipynb:cell6). Unmatched -> NULL.
 WINNER_MAP = {"0-1": "black", "1-0": "white", "1/2-1/2": "draw"}
-
-# F9: result inversion for the Black-perspective row (ingester.py:373-377).
-RESULT_INVERSION = {"1-0": "0-1", "0-1": "1-0"}
 
 
 def question_to_null(col: Column | str) -> Column:
@@ -41,74 +37,18 @@ def recode(col: Column | str, mapping: dict[str, str], default: Column | None = 
     return expr.otherwise(default) if default is not None else expr
 
 
-def invert_result(col: Column | str) -> Column:
-    """F9: swap 1-0 <-> 0-1, identity otherwise (ingester.py:373)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return recode(c, RESULT_INVERSION, default=c)
-
-
-def strip_plus(col: Column | str) -> Column:
-    """F2: remove '+' from rating-diff strings pre-cast (ingester.py:337)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"\+", "")
-
-
-def elo_smallint(col: Column | str) -> Column:
-    """F2+F10+P6: '?'->NULL, '+'-strip, cast to smallint (ingester.py:334-337)."""
-    return strip_plus(question_to_null(col)).cast("smallint")
-
-
-def site_to_id(col: Column | str) -> Column:
-    """F3: derive game ID from the Site URL (ingester.py:339).
-
-    ``substring_index(c, '/', -1)`` keeps everything after the last
-    slash — equivalent to stripping the literal lichess prefix but
-    robust to any host.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring_index(c, "/", -1)
-
-
-def concat_datetime(date_col: Column | str, time_col: Column | str) -> Column:
-    """F5+F4: ``UTCDate + " " + UTCTime`` -> timestamp (ingester.py:227,338)."""
-    d = F.col(date_col) if isinstance(date_col, str) else date_col
-    t = F.col(time_col) if isinstance(time_col, str) else time_col
-    return F.to_timestamp(F.concat_ws(" ", d, t), "yyyy.MM.dd HH:mm:ss")
-
-
-def strip_tournament_suffix(col: Column | str) -> Column:
-    """F7: event name ``split("tournament")[0].strip()`` (ingester.py:149)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.element_at(F.split(c, "tournament"), 1))
-
-
-def truncate_moves(col: Column | str, at_move: int = 4) -> Column:
-    """F7: keep only the first ``at_move - 1`` moves by splitting at
-    the literal move number (ingester.py:156-158 splits at "4.")."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.element_at(F.split(c, rf"{at_move}\."), 1)
-
-
-def elo_bin(col: Column | str, lo: int = 0, hi: int = 4000, width: int = 200) -> Column:
+def elo_bin(col: str, lo: int = 0, hi: int = 4000, width: int = 200) -> Column:
     """F11: polars ``.cut(range(0,4001,200))`` interval labels
     (ingester.py:406): ``"(1800, 2000]"`` with open outer bins.
 
-    Implemented as pure column arithmetic (codegen-friendly); the
-    bin index is ``ceil(x/width)-1`` on the closed-open-right
-    convention polars uses (right-closed)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    # right-closed bins: value v in (lo + k*width, lo + (k+1)*width]
-    k = F.ceil((c - F.lit(lo)) / F.lit(width)) - 1
-    left = (F.lit(lo) + k * width).cast("int")
-    right = (left + width).cast("int")
-    label = F.concat(F.lit("("), left.cast("string"), F.lit(", "), right.cast("string"), F.lit("]"))
-    below = F.concat(F.lit("(-inf, "), F.lit(lo).cast("string"), F.lit("]"))
-    above = F.concat(F.lit("("), F.lit(hi).cast("string"), F.lit(", inf]"))
-    return (
-        F.when(c.isNull(), F.lit(None).cast("string"))
-        .when(c <= lo, below)
-        .when(c > hi, above)
-        .otherwise(label)
+    One SQL expression (codegen-friendly, one JVM call to build); the
+    bin index is ``ceil(x/width)-1`` on the right-closed convention
+    polars uses: value v lands in (lo + k*width, lo + (k+1)*width]."""
+    c = f"CAST({col} AS DOUBLE)"
+    left = f"CAST({lo} + (ceil(({c} - {lo}) / {width}) - 1) * {width} AS INT)"
+    return F.expr(
+        f"CASE WHEN {c} <= {lo} THEN '(-inf, {lo}]' WHEN {c} > {hi} THEN '({hi}, inf]' "
+        f"ELSE concat('(', CAST({left} AS STRING), ', ', CAST({left} + {width} AS STRING), ']') END"
     )
 
 
@@ -123,11 +63,3 @@ def stable_unit_hash(col: Column | str, modulus: int = 2**32, mult: int = 265443
     """
     c = F.col(col) if isinstance(col, str) else col
     return (c.cast("bigint") * F.lit(mult) % F.lit(modulus)) / F.lit(float(modulus))
-
-
-def stable_unit_hash_str(col: Column | str) -> Column:
-    """W5 for string keys: xxhash64 -> [0,1). Spark-side only (the
-    DuckDB oracle can't reproduce xxhash64), used by the domain
-    pipeline; the oracle-checked variant uses integer keys."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.pmod(F.xxhash64(c), F.lit(2**32)) / F.lit(float(2**32)))

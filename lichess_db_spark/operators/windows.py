@@ -51,8 +51,10 @@ def add_running_features(
     opp_elo_col: str = "OpponentElo",
     order: Sequence[str] = ("DateTime", "ID"),
 ) -> DataFrame:
-    """W1-W4 in two window specs over one Player shuffle. One
-    ``withColumns`` call, so the input plan is analysed once.
+    """W1-W4 in two window specs over one Player shuffle, as SQL text in
+    one ``selectExpr``: the input plan is analysed once, and the build
+    makes a handful of JVM calls instead of several per column
+    function.
 
     W4 note: the reference's ``Elo_max_faced`` is buggy — it compares
     the player's *own* Elo (ingester.py:210-218), making it identical
@@ -60,13 +62,16 @@ def add_running_features(
     opponent's Elo) per SURVEY §2.5; the bug-parity variant is just
     ``PlayerElo_max`` again.
     """
-    w_type = running_frame([type_col, player_col], order)
-    w_all = running_frame([player_col], order)
-    return df.withColumns(
-        {
-            "Player_cum_games_type": running_count(w_type).cast("int"),
-            "Player_cum_games_total": running_count(w_all).cast("int"),
-            "PlayerElo_max": running_max(elo_col, w_type).cast("int"),
-            "PlayerElo_max_faced": running_max(opp_elo_col, w_type).cast("int"),
-        }
+    # the SQL text of running_frame, running_count and running_max: the
+    # count includes the current row (ingester.py:186-198), and max skips
+    # a '?'-null Elo, carrying the previous max (ingester.py:200-208)
+    frame = f"ORDER BY {', '.join(order)} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    w_type = f"OVER (PARTITION BY {type_col}, {player_col} {frame})"
+    w_all = f"OVER (PARTITION BY {player_col} {frame})"
+    return df.selectExpr(
+        "*",
+        f"CAST(count(1) {w_type} AS INT) AS Player_cum_games_type",
+        f"CAST(count(1) {w_all} AS INT) AS Player_cum_games_total",
+        f"CAST(max({elo_col}) {w_type} AS INT) AS PlayerElo_max",
+        f"CAST(max({opp_elo_col}) {w_type} AS INT) AS PlayerElo_max_faced",
     )

@@ -2,9 +2,9 @@
 
 raw parsed games (White/Black wide, all strings)
   -> clean      (P6 '?'-null, F2-F5 casts/derives, P9 flags, F14 backfill)
-  -> unpivot    (P2+P3+U1 as a single-scan explode of two role structs —
+  -> unpivot    (P2+P3+U1 as a single-scan inline of two role structs —
                  the reference scans its NDJSON twice and merge-sorts,
-                 ingester.py:345-404; explode halves the IO)
+                 ingester.py:345-404; one scan halves the IO)
   -> features   (W1-W6 running windows over (Event/Player, DateTime, ID),
                  then Opponent_* from one window over ID)
   -> bin        (F11 PlayerElo_bin)
@@ -16,24 +16,22 @@ running windows; the (Event, Player) window reuses it) then `ID` (the
 opponent features); everything else is narrow. At 100 TB, write
 bucketed by Player so downstream per-player analytics (cell-8
 self-join shape) co-locate for free.
+
+Every column expression is SQL text (``selectExpr``/``F.expr``). The
+batch ingest and each streaming micro-batch rebuild this plan on the
+driver, and there every ``pyspark.sql.functions`` call costs py4j
+round trips (several per call in PySpark 4, which records call-site
+origins over py4j): on the test fixture the functions form made ~2,600
+per build of clean + unpivot + features, the text form ~160, for the
+same Catalyst plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import (
-    concat_datetime,
-    elo_bin,
-    elo_smallint,
-    invert_result,
-    question_to_null,
-    site_to_id,
-    stable_unit_hash_str,
-    strip_tournament_suffix,
-    truncate_moves,
-)
+from ..functions.scalar import elo_bin
 
 # string header columns that get '?'-null treatment (ingester.py:325-334
 # applies it to everything except the int-typed columns)
@@ -51,77 +49,86 @@ _Q_NULL_COLS = (
     "Termination",
 )
 
+# F3: game ID from the Site URL (ingester.py:339); keeping what follows
+# the last slash is robust to any host
+_SITE_ID = "substring_index(Site, '/', -1)"
+
+
+def _unit_hash(col: str) -> str:
+    """W5/W6 for string keys: xxhash64 -> [0,1). Spark-side only (the
+    DuckDB oracle cannot reproduce xxhash64); the oracle-checked
+    variant is ``functions.scalar.stable_unit_hash`` on integer keys."""
+    return f"pmod(xxhash64({col}), 4294967296) / 4294967296D"
+
+
+def _with_sql(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``withColumns`` over SQL text in one ``selectExpr``: existing
+    columns are replaced in place, new ones appended in order."""
+    kept = [f"{exprs[c]} AS {c}" if c in exprs else c for c in df.columns]
+    return df.selectExpr(*kept, *(f"{e} AS {c}" for c, e in exprs.items() if c not in df.columns))
+
 
 def clean_games(raw: DataFrame, include_moves: bool = False) -> DataFrame:
     """Header strings -> typed game-level columns (one row per game).
 
-    Two ``withColumns`` steps, not one ``withColumn`` per column: each
-    call re-analyses the lambda-heavy parse plan beneath it on the
-    driver. The derived columns read the '?'-nulled headers of the
-    first step (``Tournament`` the unstripped Event).
+    Two projections: the derived columns read the '?'-nulled headers
+    of the first (``Tournament`` the unstripped Event).
     """
-    df = raw.withColumns({c: question_to_null(c) for c in _Q_NULL_COLS if c in raw.columns})
-    game_id = site_to_id("Site")
+    df = _with_sql(raw, {c: f"nullif({c}, '?')" for c in _Q_NULL_COLS if c in raw.columns})
     derived = {
-        "Tournament": F.coalesce(F.col("Event").contains("tournament"), F.lit(False)),
-        "Event": strip_tournament_suffix("Event"),
-        "ID": game_id,
-        "DateTime": concat_datetime("UTCDate", "UTCTime"),
-        **{c: elo_smallint(c) for c in ("WhiteElo", "BlackElo",
-                                        "WhiteRatingDiff", "BlackRatingDiff")},
-        "WhiteTitle_flag": F.col("WhiteTitle").isNotNull(),
-        "BlackTitle_flag": F.col("BlackTitle").isNotNull(),
+        "Tournament": "coalesce(contains(Event, 'tournament'), false)",
+        # F7: event name split("tournament")[0].strip() (ingester.py:149)
+        "Event": "trim(substring_index(Event, 'tournament', 1))",
+        "ID": _SITE_ID,
+        # F5+F4: UTCDate + " " + UTCTime -> timestamp (ingester.py:227,338)
+        "DateTime": "to_timestamp(concat_ws(' ', UTCDate, UTCTime), 'yyyy.MM.dd HH:mm:ss')",
+        # F2+F10+P6: '?' -> NULL, '+' stripped, smallint (ingester.py:334-337)
+        **{c: f"CAST(replace(nullif({c}, '?'), '+', '') AS SMALLINT)"
+           for c in ("WhiteElo", "BlackElo", "WhiteRatingDiff", "BlackRatingDiff")},
+        "WhiteTitle_flag": "WhiteTitle IS NOT NULL",
+        "BlackTitle_flag": "BlackTitle IS NOT NULL",
         # W6: per-game random — deterministic replacement for the
         # reference's unseeded random() (drawn twice, second wins,
         # ingester.py:195); keyed on the game ID.
-        "ID_random": stable_unit_hash_str(game_id),
-        # W5: per-player stable tags
-        "White_random": stable_unit_hash_str("White"),
-        "Black_random": stable_unit_hash_str("Black"),
+        "ID_random": _unit_hash(_SITE_ID),
+        # W5: per-player stable tags (ingester.py:180-196)
+        "White_random": _unit_hash("White"),
+        "Black_random": _unit_hash("Black"),
     }
     if include_moves and "Moves" in df.columns:
-        derived["Evaluation_flag"] = F.coalesce(F.col("Moves").contains("eval"), F.lit(False))
-        derived["Moves"] = truncate_moves("Moves")
-    df = df.withColumns(derived)
+        derived["Evaluation_flag"] = "coalesce(contains(Moves, 'eval'), false)"
+        # F7: keep the first 3 moves, cut at the literal "4."
+        # (ingester.py:156-158)
+        derived["Moves"] = "substring_index(Moves, '4.', 1)"
+    df = _with_sql(df, derived)
     return df if include_moves else df.drop("Moves")
 
 
-def _role_struct(role: str, include_moves: bool) -> Column:
+def _role_struct(role: str) -> str:
     me, opp = ("White", "Black") if role == "White" else ("Black", "White")
-    result = F.col("Result") if role == "White" else invert_result("Result")
-    fields = [
-        F.lit(role).alias("Role_player"),
-        F.col(me).alias("Player"),
-        F.col(opp).alias("Opponent"),
-        F.col(f"{me}Elo").alias("PlayerElo"),
-        F.col(f"{opp}Elo").alias("OpponentElo"),
-        F.col(f"{me}Title").alias("PlayerTitle"),
-        F.col(f"{opp}Title").alias("OpponentTitle"),
-        F.col(f"{me}Title_flag").alias("PlayerTitle_flag"),
-        F.col(f"{opp}Title_flag").alias("OpponentTitle_flag"),
-        F.col(f"{me}RatingDiff").alias("PlayerRatingDiff"),
-        F.col(f"{opp}RatingDiff").alias("OpponentRatingDiff"),
-        F.col(f"{me}_random").alias("Player_random"),
-        F.col(f"{opp}_random").alias("Opponent_random"),
-        result.alias("Result"),
-    ]
-    return F.struct(*fields)
+    # F9: 1-0 <-> 0-1 on the Black row, identity otherwise
+    # (ingester.py:373-377)
+    result = "CASE Result WHEN '1-0' THEN '0-1' WHEN '0-1' THEN '1-0' ELSE Result END"
+    fields = {"Role_player": f"'{role}'"}
+    fields |= {side + suffix: col + suffix
+               for suffix in ("", "Elo", "Title", "Title_flag", "RatingDiff", "_random")
+               for side, col in (("Player", me), ("Opponent", opp))}
+    fields["Result"] = "Result" if role == "White" else result
+    return "named_struct({})".format(", ".join(f"'{k}', {v}" for k, v in fields.items()))
 
 
 def unpivot_roles(games: DataFrame, include_moves: bool = False) -> DataFrame:
-    """P2+P3+U1 as one explode: each game emits a White-perspective and
-    a Black-perspective struct; Result is inverted on the Black row via
-    a when-chain (F9 de-UDF'd, reference used a Python lambda at
+    """P2+P3+U1 as one ``inline``: each game emits a White-perspective
+    and a Black-perspective row; Result is inverted on the Black row by
+    a CASE (F9 de-UDF'd, reference used a Python lambda at
     ingester.py:377). Single scan — the reference reads its NDJSON
     twice and merge-sorts (ingester.py:329-403)."""
     shared = ["ID", "ID_random", "Event", "Tournament", "ECO", "Opening", "TimeControl",
               "Termination", "DateTime"]
     if include_moves:
         shared += ["Moves", "Evaluation_flag"]
-    roles = F.explode(
-        F.array(_role_struct("White", include_moves), _role_struct("Black", include_moves))
-    ).alias("r")
-    return games.select(*shared, roles).select(*shared, "r.*")
+    roles = f"inline(array({_role_struct('White')}, {_role_struct('Black')}))"
+    return games.selectExpr(*shared, roles)
 
 
 def add_features(unpivoted: DataFrame) -> DataFrame:
@@ -141,22 +148,18 @@ def add_features(unpivoted: DataFrame) -> DataFrame:
     """
     from ..operators.windows import add_running_features
 
-    game = Window.partitionBy("ID")
-    white = F.col("Role_player") == "White"
-
-    def other_row(c: str) -> Column:
-        on_black, on_white = (F.max(F.when(side, F.col(c))).over(game) for side in (~white, white))
-        return F.when(white, on_black).otherwise(on_white)
+    def other_row(c: str) -> str:
+        side = "max(CASE WHEN Role_player {} 'White' THEN {} END) OVER (PARTITION BY ID)"
+        return (f"CASE WHEN Role_player = 'White' THEN {side.format('!=', c)} "
+                f"ELSE {side.format('=', c)} END AS {c.replace('Player', 'Opponent')}")
 
     features = ("Player_cum_games_type", "Player_cum_games_total", "PlayerElo_max",
                 "PlayerElo_max_faced")
     return (
         add_running_features(unpivoted)
-        .where(F.col("ID").isNotNull())
-        .withColumns(
-            {c.replace("Player", "Opponent"): other_row(c) for c in features}
-            | {"PlayerElo_bin": elo_bin("PlayerElo")}
-        )
+        .where("ID IS NOT NULL")
+        .select("*", *(F.expr(other_row(c)) for c in features),
+                elo_bin("PlayerElo").alias("PlayerElo_bin"))
     )
 
 

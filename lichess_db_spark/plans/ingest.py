@@ -52,9 +52,14 @@ def ingest_months(
 
     ``compression`` defaults to gzip for reference parity (S5's Drill
     compatibility, ingester.py:418-421); pass ``zstd`` for the faster
-    write path — parquet write dominates ingest wall-clock, and zstd
-    encodes several times faster than gzip at comparable ratios
-    (bench_ingest.py --compression zstd measures the difference).
+    write path — zstd encodes several times faster than gzip at
+    comparable ratios (bench_ingest.py --compression zstd measures the
+    difference). The write is not the dominant cost: in the traced
+    benchmark ingest (perfbench ``--trace 1``, 3 months of 4,000 games,
+    local[4] on a 4-core host) ``io.write_s`` is 0.18–0.33 s of a
+    1.0–1.8 s operation; the parse (~0.4–0.55 s), the running and
+    opponent windows (~0.3–0.4 s) and the driver-side plan build take
+    most of the rest.
     """
     stage_months(months, staging_dir)
     df = build_games_table(spark, f"{staging_dir}/*/*/*.pgn", include_moves)
@@ -70,5 +75,4 @@ def build_games_table(
     spark: SparkSession, staged_glob: str, include_moves: bool = False
 ) -> DataFrame:
     """parse + clean + unpivot + features from staged PGN text."""
-    raw = parse_pgn_text(spark, staged_glob).drop("game_id")
-    return games_pipeline(raw, include_moves)
+    return games_pipeline(parse_pgn_text(spark, staged_glob), include_moves)

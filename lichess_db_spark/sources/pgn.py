@@ -18,6 +18,15 @@ non-splittable stream, so the unit of parallelism is the month file
 (staged to chunked text by sources.staging, cut at game boundaries);
 after staging, each chunk file parses in one task, so the unit of
 parallelism is the chunk.
+
+The array expressions are SQL text (``selectExpr`` with SQL ``x -> ...``
+lambdas), not ``pyspark.sql.functions`` calls. The plan is rebuilt
+on every batch ingest and every streaming micro-batch, and each
+``functions`` call is one or more py4j round trips (PySpark 4 also
+records its call-site origin over py4j); Python lambdas inside
+``transform``/``filter`` multiply them. On the test fixture the parse
+in that form cost ~2,000 round trips per build; as text it costs ~45,
+for the same Catalyst plan.
 """
 
 from __future__ import annotations
@@ -25,8 +34,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 HEADER_RE = re.compile(r'\[(.*?)\s"(.*)"\]')
@@ -71,7 +79,7 @@ def parse_pgn_text(spark: SparkSession, path: str) -> DataFrame:
 
     Game assembly happens INSIDE the file row with array expressions
     (split / filter / transform / map_from_entries), then one
-    ``posexplode`` emits a row per game: the whole parse is map-only.
+    ``explode`` emits a row per game: the whole parse is map-only.
     The previous form exploded lines and regrouped them with a
     per-file window + a per-game groupBy — two cluster-wide shuffles
     of every PGN line; at 100 TB that shuffle IO dominated the parse.
@@ -93,56 +101,30 @@ def parse_pgn_text(spark: SparkSession, path: str) -> DataFrame:
     # (split of the whole chunk per line — O(lines²) per file).
     # Multi-referenced non-cheap expressions are exactly what
     # CollapseProject refuses to inline, so the steps stay distinct.
-    staged = files.select(
-        F.col("path").alias("_file"),
-        F.split(F.decode(F.col("content"), "UTF-8"), "\r?\n").alias("_lines"),
-    )
-    lines = F.col("_lines")
-    line = lambda i: F.element_at(lines, i + 1)  # noqa: E731  (0-based)
+    # The regexes are raw SQL literals (r'...'): no backslash doubling,
+    # and spark.sql.parser.escapedStringLiterals cannot change them.
+    staged = files.selectExpr(r"split(decode(content, 'UTF-8'), r'\r?\n') AS _lines")
     # 0-based positions of moves lines (= game ends)
-    staged = staged.select(
-        "_file",
+    staged = staged.selectExpr(
         "_lines",
-        F.filter(
-            F.sequence(F.lit(0), F.size(lines) - 1),
-            lambda i: (~line(i).startswith("[")) & (F.trim(line(i)) != ""),
-        ).alias("_midx"),
+        """filter(sequence(0, size(_lines) - 1),
+                  i -> NOT startswith(_lines[i], '[') AND trim(_lines[i]) != '') AS _midx""",
     )
-    midx = F.col("_midx")
-
-    def game(m: Column, i: Column) -> Column:
-        # headers live between the previous game's moves line and m
-        prev = F.when(i == 0, F.lit(-1)).otherwise(F.element_at(midx, i))
-        rng = F.when(m - 1 >= prev + 1, F.sequence(prev + 1, m - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        hlines = F.filter(
-            F.transform(rng, lambda j: line(j)), lambda l: l.startswith("[")
-        )
-        entries = F.transform(
-            hlines,
-            lambda l: F.struct(
-                F.regexp_extract(l, r'\[(\S+)\s"', 1).alias("k"),
-                F.regexp_extract(l, r'\[\S+\s"(.*)"\]', 1).alias("v"),
-            ),
-        )
-        return F.struct(
-            F.map_from_entries(
-                F.filter(entries, lambda e: e["k"] != "")  # malformed -> ignored
-            ).alias("h"),
-            line(m).alias("Moves"),
-        )
-
-    exploded = staged.select(
-        "_file",
-        F.posexplode(F.transform(midx, game)).alias("_gi", "_g"),
+    # game i: its moves line m and the header lines from `first` (the
+    # line after the previous game's moves line) up to m; header lines
+    # with no key are malformed and ignored
+    first = "IF(i = 0, 0, _midx[i - 1] + 1)"
+    games = staged.selectExpr(
+        rf"""explode(transform(_midx, (m, i) -> named_struct(
+              'h', map_from_entries(filter(
+                     transform(
+                       filter(slice(_lines, {first} + 1, m - {first}), l -> startswith(l, '[')),
+                       l -> named_struct('k', regexp_extract(l, r'\[(\S+)\s"', 1),
+                                         'v', regexp_extract(l, r'\[\S+\s"(.*)"\]', 1))),
+                     e -> e.k != '')),
+              'Moves', _lines[m]))) AS _g"""
     )
-    cols = [F.col("_g.h").getItem(f).alias(f) for f in HEADER_FIELDS]
-    return exploded.select(
-        F.concat_ws("#", F.col("_file"), F.col("_gi").cast("string")).alias("game_id"),
-        *cols,
-        F.col("_g.Moves").alias("Moves"),
-    )
+    return games.selectExpr(*(f"_g.h['{f}'] AS {f}" for f in HEADER_FIELDS), "_g.Moves AS Moves")
 
 
 def parse_pgn_partitions(lines_iter: Iterator[str]) -> Iterator[dict]:

@@ -17,7 +17,12 @@ FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "games.pgn")
 
 @pytest.fixture(scope="module")
 def games(spark):
-    return games_pipeline(parse_pgn_text(spark, FIXTURE)).cache()
+    # unpersisted at teardown: a plan built from SQL text is identical on
+    # every build, so a leaked cache entry would stand in for the scan
+    # in later modules' plans of the same fixture
+    df = games_pipeline(parse_pgn_text(spark, FIXTURE)).cache()
+    yield df
+    df.unpersist()
 
 
 def test_total_games(games):

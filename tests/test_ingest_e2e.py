@@ -44,7 +44,7 @@ def test_ingest_to_partitioned_parquet(spark):
     out = tempfile.mkdtemp(prefix="games_out_")
     try:
         _split_fixture_by_month(staging)
-        raw = parse_pgn_text(spark, f"{staging}/*/*/*.pgn").drop("game_id")
+        raw = parse_pgn_text(spark, f"{staging}/*/*/*.pgn")
         assert raw.count() == 6
         df = games_pipeline(raw)
         write_parquet(
@@ -77,10 +77,10 @@ def test_incremental_month_equals_full_recompute(spark):
     try:
         _split_fixture_by_month(staging)
         full = games_pipeline(
-            parse_pgn_text(spark, f"{staging}/*/*/*.pgn").drop("game_id")
+            parse_pgn_text(spark, f"{staging}/*/*/*.pgn")
         )
         m1 = games_pipeline(
-            parse_pgn_text(spark, f"{staging}/year=2012/*/*.pgn").drop("game_id")
+            parse_pgn_text(spark, f"{staging}/year=2012/*/*.pgn")
         )
         cols = ["ID", "Role_player", "Player_cum_games_total", "PlayerElo_max"]
         full_m1 = {tuple(r) for r in full.where(F.year("DateTime") == 2012).select(*cols).collect()}
@@ -96,39 +96,42 @@ def test_incremental_month_equals_full_recompute(spark):
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def test_parser_tolerates_malformed_input(spark):
-    d = tempfile.mkdtemp(prefix="badpgn_")
-    try:
-        with open(os.path.join(d, "bad.pgn"), "w") as fh:
-            fh.write(
-                "[Event \"Rated Blitz game\"]\n"
-                "[Site \"https://lichess.org/goodgame\"]\n"
-                "[White \"a\"]\n[Black \"b\"]\n[Result \"1-0\"]\n"
-                "\n"
-                "1. e4 e5 1-0\n"
-                "\n"
-                "[Malformed header no quotes]\n"
-                "[Event \"Rated Blitz game\"]\n"
-                "[Site \"https://lichess.org/tailgame\"]\n"
-                "[White \"c\"]\n[Black \"d\"]\n[Result \"0-1\"]\n"
-                "\n"
-                "1. d4 d5 0-1\n"
-                "\n"
-                "[Event \"Orphan headers with no moves line\"]\n"
-                "[Site \"https://lichess.org/orphan\"]\n"
-            )
-        df = parse_pgn_text(spark, os.path.join(d, "bad.pgn"))
-        rows = {r.Site: r for r in df.collect()}
+_MALFORMED_PGN = (
+    "[Event \"Rated Blitz game\"]\n"
+    "[Site \"https://lichess.org/goodgame\"]\n"
+    "[White \"a\"]\n[Black \"b\"]\n[Result \"1-0\"]\n"
+    "\n"
+    "1. e4 e5 1-0\n"
+    "\n"
+    "[Malformed header no quotes]\n"
+    "[Event \"Rated Blitz game\"]\n"
+    "[Site \"https://lichess.org/tailgame\"]\n"
+    "[White \"c\"]\n[Black \"d\"]\n[Result \"0-1\"]\n"
+    "\n"
+    "1. d4 d5 0-1\n"
+    "\n"
+    "[Event \"Orphan headers with no moves line\"]\n"
+    "[Site \"https://lichess.org/orphan\"]\n"
+)
+
+
+def test_parser_tolerates_malformed_input(spark, tmp_path):
+    """Run on LF and on CRLF line endings: CRLF exercises the line-split
+    regex, and the moves line would keep a trailing CR if the split
+    lost its ``\\r?``."""
+    for name, newline in (("lf", "\n"), ("crlf", "\r\n")):
+        path = tmp_path / f"bad_{name}.pgn"
+        path.write_bytes(_MALFORMED_PGN.replace("\n", newline).encode())
+        rows = {r.Site: r for r in parse_pgn_text(spark, str(path)).collect()}
         # both complete games parse; the malformed header is ignored;
         # the trailing moves-less game is dropped (reference flushes
         # only on a completed moves line, ingester.py:162-235)
         assert set(rows) == {
             "https://lichess.org/goodgame",
             "https://lichess.org/tailgame",
-        }
-        assert rows["https://lichess.org/tailgame"].White == "c"
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        }, name
+        assert rows["https://lichess.org/tailgame"].White == "c", name
+        assert rows["https://lichess.org/tailgame"].Moves == "1. d4 d5 0-1", name
 
 
 def test_load_table_events_both_timestamp_encodings(spark, tmp_path):

@@ -16,7 +16,11 @@ FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "games.pgn")
 
 @pytest.fixture(scope="module")
 def raw_games(spark):
-    return parse_pgn_text(spark, FIXTURE).cache()
+    # unpersisted at teardown, as in test_eda_parity: later modules plan
+    # the same fixture and must not find it cached
+    df = parse_pgn_text(spark, FIXTURE).cache()
+    yield df
+    df.unpersist()
 
 
 def test_parse_game_count(raw_games):
@@ -92,7 +96,7 @@ def test_running_features(raw_games):
 
 
 def test_invariants(raw_games):
-    out = games_pipeline(raw_games).cache()
+    out = games_pipeline(raw_games)
     # each ID appears exactly twice
     bad = out.groupBy("ID").count().where(F.col("count") != 2)
     assert bad.count() == 0
@@ -102,6 +106,36 @@ def test_invariants(raw_games):
     # Elo bin labels
     r = out.where((F.col("ID") == "j1dkb5dw") & (F.col("Role_player") == "White")).first()
     assert r.PlayerElo_bin == "(1600, 1800]"
+
+
+# the canonical table's columns and types (SURVEY.md §1.3); pinned
+# so a rewrite of the pipeline's expressions cannot drift a type
+_GAME_COLS = [
+    ("ID", "string"), ("ID_random", "double"), ("Event", "string"),
+    ("Tournament", "boolean"), ("ECO", "string"), ("Opening", "string"),
+    ("TimeControl", "string"), ("Termination", "string"), ("DateTime", "timestamp"),
+]
+_ROLE_COLS = [
+    ("Role_player", "string"), ("Player", "string"), ("Opponent", "string"),
+    ("PlayerElo", "smallint"), ("OpponentElo", "smallint"),
+    ("PlayerTitle", "string"), ("OpponentTitle", "string"),
+    ("PlayerTitle_flag", "boolean"), ("OpponentTitle_flag", "boolean"),
+    ("PlayerRatingDiff", "smallint"), ("OpponentRatingDiff", "smallint"),
+    ("Player_random", "double"), ("Opponent_random", "double"), ("Result", "string"),
+    ("Player_cum_games_type", "int"), ("Player_cum_games_total", "int"),
+    ("PlayerElo_max", "int"), ("PlayerElo_max_faced", "int"),
+    ("Opponent_cum_games_type", "int"), ("Opponent_cum_games_total", "int"),
+    ("OpponentElo_max", "int"), ("OpponentElo_max_faced", "int"),
+    ("PlayerElo_bin", "string"),
+]
+
+
+@pytest.mark.parametrize("include_moves", [False, True])
+def test_games_pipeline_schema(raw_games, include_moves):
+    moves = [("Moves", "string"), ("Evaluation_flag", "boolean")] if include_moves else []
+    schema = games_pipeline(raw_games, include_moves).schema
+    got = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+    assert got == _GAME_COLS + moves + _ROLE_COLS
 
 
 def test_mirrored_feature_consistency(raw_games):
@@ -192,7 +226,7 @@ def test_shared_id_games_do_not_fan_out(spark, tmp_path):
 def test_multisplit_chunk_order_contract(spark, tmp_path):
     """Line order must come from file content, not partition ids: a
     chunk many times larger than maxPartitionBytes parses identically
-    to the imperative twin. binaryFile + posexplode makes this hold by
+    to the imperative twin. binaryFile + explode makes this hold by
     contract (the source is non-splittable), where the old
     spark.read.text + monotonically_increasing_id form relied on
     FileSourceScan packing splits in offset order."""

@@ -253,6 +253,29 @@ def test_games_table_parses_once_without_join(spark):
     assert sorted(re.sub(r"#\d+", "", k) for k in keys) == ["ID", "Player"], plan
 
 
+def test_games_table_build_makes_few_jvm_round_trips(spark, monkeypatch):
+    """The batch ingest and every streaming micro-batch rebuild the
+    games plan on the driver. Built from SQL text it costs a few
+    hundred py4j round trips; built from ``pyspark.sql.functions``
+    calls (each one sets its call-site origin over py4j, and the
+    lambdas multiply them) it cost over 4,000. Counting calls, not
+    timing them, keeps the bound deterministic."""
+    import os
+
+    from py4j.clientserver import ClientServerConnection
+
+    from lichess_db_spark.plans.ingest import build_games_table
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "games.pgn")
+    send = ClientServerConnection.send_command
+    calls = []
+    monkeypatch.setattr(ClientServerConnection, "send_command",
+                        lambda self, command: calls.append(command) or send(self, command))
+    build_games_table(spark, fixture)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 500, len(calls)
+
+
 def test_tfidf_builds_lazily_without_vocab_broadcast(spark):
     """tfidf_top_terms must not run a job at plan-build (corpus count is
     a cross-joined 1-row aggregate, not a driver .count()) and must not
@@ -382,7 +405,7 @@ def test_ivf_partitioned_search_prunes(spark, tmp_path):
 def test_pgn_parse_is_map_only(spark):
     """The PGN parse must be shuffle-free: game assembly happens inside
     the file row with array expressions (binaryFile -> split -> filter/
-    transform -> posexplode). The previous form exploded lines and
+    transform -> explode). The previous form exploded lines and
     regrouped them with a per-file window + per-game groupBy — two
     cluster-wide shuffles of every PGN line, pure waste since binaryFile
     already colocates a file's lines in one task."""
